@@ -23,6 +23,8 @@ Physical strategy for CC is adaptive, like AQE join selection:
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -70,6 +72,46 @@ def _driver_union_find(vertices: DataFrame, edge_pairs: list, id_col: str) -> Da
     )
 
 
+@contextmanager
+def _symmetric_edges(edges: DataFrame, self_loops: bool = False):
+    """The undirected (u, v) edge list as a long relation holding both
+    orientations, cached hash-partitioned on the probe key ``u`` for
+    the ``with`` block and unpersisted on exit. Every graph loop here
+    joins its per-vertex state on ``u`` and aggregates by ``v``; the
+    probe join exchanges only the state side, because ``persist``
+    keeps the repartition's output partitioning in the cached plan. A
+    local checkpoint loses it, and a join whose state comes out of a
+    separate job then re-exchanges the O(E) edge side every round.
+    Callers materialize (localCheckpoint) whatever they return before
+    leaving the block.
+
+    Each input row is exploded into both orientations, so the edge
+    source is evaluated once. Duplicate rows and input self-loops stay
+    as multi-edges. ``self_loops=True`` is the connected-components
+    form: input self-loops are dropped, rows are made distinct, and one
+    (v, v) row is added per touched vertex, so an aggregate by ``v``
+    also sees v's own state."""
+    u, v = F.col("u").cast("long"), F.col("v").cast("long")
+    rows = [F.struct(u.alias("u"), v.alias("v")), F.struct(v.alias("u"), u.alias("v"))]
+    if self_loops:
+        edges = edges.filter(u != v)
+        rows += [F.struct(u.alias("u"), u.alias("v")), F.struct(v.alias("u"), v.alias("v"))]
+    sym = edges.select(F.explode(F.array(*rows)).alias("_p")).select("_p.u", "_p.v")
+    if self_loops:
+        sym = sym.distinct()
+    sym = sym.repartition("u").persist()
+    try:
+        yield sym
+    finally:
+        sym.unpersist()
+
+
+def _label_sum(lbl: DataFrame):
+    """Exact label total (None when empty) — a strict monotone of the
+    min-label loop, so equal sums mean a fixed point."""
+    return lbl.agg(F.sum(F.col("l").cast("decimal(38,0)"))).first()[0]
+
+
 def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
@@ -84,6 +126,7 @@ def connected_components(
     the component — deterministic regardless of execution order.
     """
     vs = vertices.select(F.col(id_col).cast("long").alias("v"))
+    identity = vs.select(F.col("v").alias(id_col), F.col("v").alias("cluster_id"))
     e = edges.select(F.col("u").cast("long"), F.col("v").cast("long")).filter(
         F.col("u") != F.col("v")
     )
@@ -99,91 +142,57 @@ def connected_components(
         if n_edges <= driver_cutoff:
             try:
                 if n_edges == 0:
-                    return vs.select(
-                        F.col("v").alias(id_col), F.col("v").alias("cluster_id")
-                    )
+                    return identity
                 pdf = e.toPandas()
                 pairs = list(zip(pdf["u"].to_numpy(), pdf["v"].to_numpy()))
                 return _driver_union_find(vs, pairs, "v").withColumnRenamed("v", id_col)
             finally:
                 e.unpersist()
-    # Symmetrize with ONE reference to the edge set (optimization r9
-    # residual sweep): e.union(e.flipped) plans the edge subtree — a
-    # full similarity kernel for the threshold-CC queries — TWICE when
-    # e is not already cached (driver_cutoff=0 path); exploding each
-    # edge into both directions keeps a single pipelined evaluation
-    # with the identical (u, v) row set feeding the same distinct.
-    sym0 = (
-        e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u"), F.col("v")),
-                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
-                )
-            ).alias("_p")
-        )
-        .select("_p.u", "_p.v")
-        .distinct()
-    )
-    touched = sym0.select(F.col("u").alias("v")).distinct()
-    # Two per-iteration shuffles removed (optimization r10, guide §2.4):
-    # (a) SELF-LOOPS (v, v) fold the "keep own label" term into the
-    #     neighbor-min aggregate, so the per-iteration least(own,
-    #     nbr-min) join — and its exchange of the label relation by v —
-    #     disappears: min over (neighbors ∪ self) IS least(own, nbr min).
-    # (b) the symmetrized edge relation is cached PRE-PARTITIONED on the
-    #     probe key u (persist keeps the plan's output partitioning;
-    #     AQE leaves cached plans alone by default), so each iteration
-    #     shuffles only the label relation (O(V) rows) instead of
-    #     re-exchanging the edge relation (O(E) rows) every round — at
-    #     scale the edge side dominates, so per-iteration shuffle bytes
-    #     drop from E+V to V. Equivalence: identical label fixpoint
-    #     (probe at sf0.1: same 1964-row assignment, 7 iterations both).
-    sym = (
-        sym0.unionByName(touched.select(F.col("v").alias("u"), F.col("v")))
-        .repartition("u")
-        .persist()
-    )
-    lbl = touched.select("v", F.col("v").alias("l")).localCheckpoint()
-    prev_sum = None
-    for _ in range(max_iter):
-        # min over (neighbors ∪ self): the self-loop row carries v's own
-        # label through the same aggregate
-        stepped = (
-            sym.join(lbl.withColumnRenamed("v", "u"), "u")
-            .groupBy("v")
-            .agg(F.min("l").alias("l"))
-        )
-        # pointer jump: l(v) <- l(l(v)) — collapses chains in O(log n)
-        # LAZY localCheckpoint (optimization r9): the convergence agg
-        # below is the action that materializes it, so each iteration
-        # runs ONE driver job instead of two (eager checkpoint job +
-        # agg job) — the iteration count is unchanged, the
-        # driver-serialized job chain is halved.
-        jumped = (
-            stepped.alias("a")
-            .join(
-                stepped.select(F.col("v").alias("l"), F.col("l").alias("l2")).alias("b"),
-                "l",
-                "left",
-            )
-            .select(F.col("v"), F.least(F.col("l"), F.coalesce("l2", "l")).alias("l"))
+    with _symmetric_edges(e, self_loops=True) as sym:
+        # the (v, v) rows are exactly the touched vertices; the job that
+        # sums their initial labels also fills the edge cache, so the
+        # edge source is evaluated once
+        lbl0 = (
+            sym.filter(F.col("u") == F.col("v"))
+            .select("v", F.col("v").alias("l"))
             .localCheckpoint(eager=False)
         )
-        # labels only ever decrease; the total is a strict monotone —
-        # equal sums mean a fixed point (one cheap agg, no join)
-        cur_sum = jumped.agg(F.sum(F.col("l").cast("decimal(38,0)"))).first()[0]
-        lbl = jumped
-        if prev_sum is not None and cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    sym.unpersist()
-    e.unpersist()
+        prev_sum = _label_sum(lbl0)
+        # only after the edge cache is loaded, or Spark rebuilds it
+        e.unpersist()
+        if prev_sum is None:  # no edges: every vertex is its own component
+            return identity
+        lbl = lbl0
+        for _ in range(max_iter):
+            # min over (neighbors ∪ self): the self-loop row carries v's
+            # own label through the same aggregate
+            stepped = (
+                sym.join(lbl.withColumnRenamed("v", "u"), "u")
+                .groupBy("v")
+                .agg(F.min("l").alias("l"))
+            )
+            # pointer jump: l(v) <- l(l(v)) — collapses chains in O(log n).
+            # The lazy checkpoint is materialized by the convergence sum,
+            # one driver job per iteration.
+            lbl = (
+                stepped.alias("a")
+                .join(
+                    stepped.select(F.col("v").alias("l"), F.col("l").alias("l2")).alias("b"),
+                    "l",
+                    "left",
+                )
+                .select(F.col("v"), F.least(F.col("l"), F.coalesce("l2", "l")).alias("l"))
+                .localCheckpoint(eager=False)
+            )
+            cur_sum = _label_sum(lbl)
+            if cur_sum == prev_sum:
+                break
+            prev_sum = cur_sum
     # edges may reference ids absent from `vertices`; keep output rows
     # only for the requested vertex set (matches the driver-union-find
     # path, which joins back to vertices)
     lbl = lbl.join(vs, "v", "leftsemi")
-    isolated = vs.join(touched, "v", "leftanti").select("v", F.col("v").alias("l"))
+    isolated = vs.join(lbl0, "v", "leftanti").select("v", F.col("v").alias("l"))
     return lbl.union(isolated).select(
         F.col("v").alias(id_col), F.col("l").alias("cluster_id")
     )
@@ -365,40 +374,36 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
     until a round removes nothing", and on bounded-degeneracy near-dup
     graphs the peel converges in a handful of rounds.
 
-    Scale shape per round: one keyed count (degrees) + two semi-joins
-    of the edge list against the survivor set — all equi-joins on node
-    ids, nothing quadratic, no driver state. Input: undirected edges
-    (u, v) with u < v, no duplicates. Output: (vec_id, deg) for every
+    Node-centric: the state is the alive vertex set, not the shrinking
+    edge list. Per round deg(v) = edges ⋈_u alive, counted by v and
+    semi-joined to alive — equi-joins on node ids, nothing quadratic,
+    no driver state. Duplicate edges and self-loops count as
+    multi-edges (a self-loop adds 2). Output: (vec_id, deg) for every
     node still alive after ``rounds`` peels, with its degree in the
     surviving subgraph — the standard triage signal for "densely
     interlinked near-duplicate mass" (a template family survives the
     peel; incidental pairwise matches do not)."""
-    sym = (
-        edges.selectExpr("u", "v")
-        .union(edges.selectExpr("v AS u", "u AS v"))
-        .localCheckpoint()
-    )
-    alive = sym
-    for _ in range(rounds):
-        deg = alive.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.filter(F.col("d") >= k).select("u")
-        # alive is referenced 3x per round (degrees + both semi-join
-        # probes) and feeds the next round — without a per-round
-        # materialization the recompute tree grows 3^rounds (the
-        # r4 "referenced ~5x -> recomputes per reference" lesson).
-        # LAZY checkpoint (optimization r9): truncation of the plan
-        # tree happens at checkpoint-call time either way; deferring
-        # materialization to the final action removes one driver job
-        # per round (the RDD is cached at first compute inside the
-        # one real job, and later references read the cache).
-        alive = (
-            alive.join(keep, "u", "left_semi")
-            .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
-            .localCheckpoint(eager=False)
-        )
-    return alive.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg")).select(
-        F.col("u").alias("vec_id"), "deg"
-    )
+    with _symmetric_edges(edges) as sym:
+        # full degrees: counting by u equals counting by v on the
+        # symmetric relation, and u needs no exchange
+        deg = sym.groupBy(F.col("u").alias("v")).agg(F.count(F.lit(1)).alias("d"))
+        for _ in range(rounds):
+            # alive feeds both the probe and the survivor semi-join, so
+            # the lazy checkpoint keeps the plan from doubling per round
+            alive = (
+                deg.filter(F.col("d") >= k)
+                .select(F.col("v").alias("u"))
+                .localCheckpoint(eager=False)
+            )
+            deg = (
+                sym.join(alive, "u")
+                .groupBy("v")
+                .agg(F.count(F.lit(1)).alias("d"))
+                .join(alive.withColumnRenamed("u", "v"), "v", "left_semi")
+            )
+        return deg.select(
+            F.col("v").alias("vec_id"), F.col("d").cast("long").alias("deg")
+        ).localCheckpoint()
 
 
 def resource_allocation_links(
@@ -423,46 +428,44 @@ def resource_allocation_links(
     super-hubs as CENTERS the way cap_shingle_df caps hot shingles —
     a capped hub still scores via its other neighbors' wedges), one
     keyed integer sum, one left join flagging existing edges, then
-    the two-pass global rank. Output:
+    the two-pass global rank. Edges are undirected: (u, v) and (v, u)
+    and repeats are one edge. Output:
     (u, v, score_micro, linked, rank), top_n rows under the total
     (score DESC, u, v) order."""
-    e = (
-        edges.select(F.col("u").cast("long"), F.col("v").cast("long"))
-        .distinct()
-        .localCheckpoint()
-    )
-    sym = e.union(e.selectExpr("v AS u", "u AS v"))
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    centers = deg if max_center_degree is None else deg.filter(
-        F.col("d") <= max_center_degree
-    )
-    n1 = sym.join(centers.select("u"), "u", "left_semi")
-    wedges = (
-        n1.select(F.col("u").alias("_w"), F.col("v").alias("_a"))
-        .join(n1.select(F.col("u").alias("_w"), F.col("v").alias("_b")), "_w")
-        .filter(F.col("_a") < F.col("_b"))
-    )
-    contrib = wedges.join(deg.withColumnRenamed("u", "_w"), "_w").select(
-        "_a", "_b", F.expr(f"{unit} div d").alias("_c")
-    )
-    sc = contrib.groupBy("_a", "_b").agg(
-        F.sum("_c").cast("long").alias("score_micro")
-    )
-    flagged = sc.join(
-        e.select(F.col("u").alias("_a"), F.col("v").alias("_b"), F.lit(1).alias("_l")),
-        ["_a", "_b"],
-        "left",
-    ).select(
-        F.col("_a").alias("u"),
-        F.col("_b").alias("v"),
-        "score_micro",
-        F.coalesce(F.col("_l"), F.lit(0)).cast("long").alias("linked"),
-    )
     from streaming_cdc_spark.operators.ranking import row_number_global
 
-    return row_number_global(
-        flagged, [F.desc("score_micro"), F.asc("u"), F.asc("v")], "rank"
-    ).filter(F.col("rank") <= top_n)
+    u, v = F.col("u").cast("long"), F.col("v").cast("long")
+    canonical = edges.select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
+    with _symmetric_edges(canonical.distinct()) as sym:
+        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+        centers = deg if max_center_degree is None else deg.filter(
+            F.col("d") <= max_center_degree
+        )
+        n1 = sym.join(centers.select("u"), "u", "left_semi")
+        wedges = (
+            n1.select(F.col("u").alias("_w"), F.col("v").alias("_a"))
+            .join(n1.select(F.col("u").alias("_w"), F.col("v").alias("_b")), "_w")
+            .filter(F.col("_a") < F.col("_b"))
+        )
+        contrib = wedges.join(deg.withColumnRenamed("u", "_w"), "_w").select(
+            "_a", "_b", F.expr(f"{unit} div d").alias("_c")
+        )
+        sc = contrib.groupBy("_a", "_b").agg(
+            F.sum("_c").cast("long").alias("score_micro")
+        )
+        flagged = sc.join(
+            sym.select(F.col("u").alias("_a"), F.col("v").alias("_b"), F.lit(1).alias("_l")),
+            ["_a", "_b"],
+            "left",
+        ).select(
+            F.col("_a").alias("u"),
+            F.col("_b").alias("v"),
+            "score_micro",
+            F.coalesce(F.col("_l"), F.lit(0)).cast("long").alias("linked"),
+        )
+        return row_number_global(
+            flagged, [F.desc("score_micro"), F.asc("u"), F.asc("v")], "rank"
+        ).filter(F.col("rank") <= top_n).localCheckpoint()
 
 
 def label_propagation(
@@ -487,25 +490,23 @@ def label_propagation(
     least one edge."""
     from pyspark.sql import Window as W
 
-    sym = (
-        edges.selectExpr("u", "v")
-        .union(edges.selectExpr("v AS u", "u AS v"))
-        .localCheckpoint()
-    )
-    labels = sym.select("u").distinct().withColumn("lbl", F.col("u"))
-    for _ in range(iterations):
-        votes = (
-            sym.join(labels.withColumnRenamed("u", "_n"), sym["u"] == F.col("_n"))
-            .groupBy("v", "lbl")
-            .agg(F.count(F.lit(1)).alias("_c"))
-        )
-        w = W.partitionBy("v").orderBy(F.desc("_c"), F.asc("lbl"))
-        labels = (
-            votes.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(F.col("v").alias("u"), "lbl")
-        )
-    return labels.select(F.col("u").alias("vec_id"), F.col("lbl").alias("community"))
+    w = W.partitionBy("v").orderBy(F.desc("_c"), F.asc("lbl"))
+    with _symmetric_edges(edges) as sym:
+        labels = sym.select("u").distinct().withColumn("lbl", F.col("u"))
+        for _ in range(iterations):
+            votes = (
+                sym.join(labels, "u")
+                .groupBy("v", "lbl")
+                .agg(F.count(F.lit(1)).alias("_c"))
+            )
+            labels = (
+                votes.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .select(F.col("v").alias("u"), "lbl")
+            )
+        return labels.select(
+            F.col("u").alias("vec_id"), F.col("lbl").alias("community")
+        ).localCheckpoint()
 
 
 def pagerank_exact(
@@ -529,28 +530,10 @@ def pagerank_exact(
     Fixed ``iterations`` keeps the op SQL-replayable (unrolled CTEs),
     like the bisection oracle's unrolled stages. Scale shape: each
     iteration is one join (edges x ranks, both keyed on the source)
-    + one keyed sum — the standard distributed PageRank step; degrees
-    are computed once. No driver-side state. Returns
+    + one keyed sum — the standard distributed PageRank step. No
+    driver-side state. Returns
     (vec_id, rank_micro) with rank in micro-units (BIGINT).
     """
-    # materialize the (possibly expensive — e.g. a cosine kernel)
-    # edge input ONCE: each iteration references it through the
-    # previous iteration's lineage, so an unchecked plan recomputes
-    # the kernel per iteration (the r4 code-review recompute trap)
-    sym = (
-        edges.selectExpr("u", "v")
-        .union(edges.selectExpr("v AS u", "u AS v"))
-        .localCheckpoint()
-    )
-    # lazy: deg derives from the eagerly-materialized sym — deferring
-    # its own materialization to the final action drops a driver job
-    # (optimization r9); its 2-refs-per-iteration reuse is unchanged
-    # (cached at first compute inside the one real job)
-    deg = (
-        sym.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=False)
-    )
     base = (100 - damping_pct) * unit // 100
     # PERSONALIZED variant (random walk with restart, Jeh & Widom
     # '03): ``seed_pred`` is a boolean Column over the node id `u` —
@@ -561,25 +544,26 @@ def pagerank_exact(
     else:
         init_r = F.when(seed_pred, F.lit(unit)).otherwise(F.lit(0))
         base_col = F.when(seed_pred, F.lit(base)).otherwise(F.lit(0))
-    # every node of the symmetrized graph has deg >= 1 and at least
-    # one in-neighbor (in = out), so no dangling-mass handling needed
-    ranks = deg.select("u", init_r.cast("long").alias("r"))
-    for _ in range(iterations):
-        contrib = (
-            sym.join(ranks, "u")
-            .join(deg, "u")
-            .select("v", F.expr("r div d").alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = deg.join(contrib, deg["u"] == contrib["v"], "left").select(
-            deg["u"],
-            (
-                base_col
-                + F.expr(f"({damping_pct} * coalesce(s, 0)) div 100")
-            ).cast("long").alias("r"),
-        )
-    return ranks.select(F.col("u").alias("vec_id"), F.col("r").alias("rank_micro"))
+    with _symmetric_edges(edges) as sym:
+        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+        # every node of the symmetrized graph has deg >= 1 and at least
+        # one in-neighbor (in = out): no dangling mass, and every node
+        # gets a contribution row
+        ranks = deg.select("u", "d", init_r.cast("long").alias("r"))
+        for _ in range(iterations):
+            contrib = (
+                sym.join(ranks, "u")
+                .groupBy("v")
+                .agg(F.sum(F.expr("r div d")).alias("s"))
+            )
+            ranks = deg.join(contrib.withColumnRenamed("v", "u"), "u").select(
+                "u",
+                "d",
+                (base_col + F.expr(f"({damping_pct} * s) div 100")).cast("long").alias("r"),
+            )
+        return ranks.select(
+            F.col("u").alias("vec_id"), F.col("r").alias("rank_micro")
+        ).localCheckpoint()
 
 
 def bfs_distances(
@@ -596,30 +580,23 @@ def bfs_distances(
     scale-shape: no driver-side frontier, no global sort, per-round
     cost linear in |edges|. Fixed round count keeps it SQL-replayable
     (the unrolled-CTE oracle family: kcore_peel_rounds,
-    label_propagation). Inputs are localCheckpointed so the edge
-    kernel isn't recomputed per round and the plan tree stays flat
-    (the pagerank_exact lesson). Returns (id_col, dist) for every
+    label_propagation). Seeds with no edges keep distance 0. Returns (id_col, dist) for every
     node within ``rounds`` hops of a seed; dist is exact BIGINT, so
     the min-reduction is order-free under any partitioning."""
-    und = (
-        edges.select("u", "v")
-        .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .localCheckpoint()
-    )
-    # per-round checkpoints are LAZY (optimization r9, the kcore_peel
-    # note): plan truncation is immediate, materialization rides the
-    # final action — rounds driver jobs become one.
+    # per-round checkpoints are lazy: the plan stays flat and the
+    # result's checkpoint materializes all rounds in one job
     dist = seeds.select(
-        F.col(id_col).alias("node"), F.lit(0).cast("long").alias("dist")
+        F.col(id_col).cast("long").alias("u"), F.lit(0).cast("long").alias("dist")
     ).localCheckpoint(eager=False)
-    for _ in range(rounds):
-        prop = und.join(dist, und.u == dist.node).select(
-            F.col("v").alias("node"), (F.col("dist") + 1).alias("dist")
-        )
-        dist = (
-            dist.unionByName(prop)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-    return dist.select(F.col("node").alias(id_col), "dist")
+    with _symmetric_edges(edges) as sym:
+        for _ in range(rounds):
+            prop = sym.join(dist, "u").select(
+                F.col("v").alias("u"), (F.col("dist") + 1).alias("dist")
+            )
+            dist = (
+                dist.unionByName(prop)
+                .groupBy("u")
+                .agg(F.min("dist").alias("dist"))
+                .localCheckpoint(eager=False)
+            )
+        return dist.select(F.col("u").alias(id_col), "dist").localCheckpoint()
