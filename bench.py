@@ -12,8 +12,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from streaming_cdc_spark import session  # noqa: E402
 from streaming_cdc_spark.queries import QUERIES  # noqa: E402
-from streaming_cdc_spark.session import get_spark  # noqa: E402
 
 # Representative operator mix: scan-agg, multi-join, window/ids, band
 # join, sweep, similarity join, connected components, metrics.
@@ -337,7 +337,7 @@ HEADLINE = [
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
-    spark = get_spark("bench")
+    spark = session.get_spark("bench")
     # Warm the JVM, codegen, parquet reader, and Python workers once so
     # per-query times measure the queries, not JIT/session startup.
     from streaming_cdc_spark.tables import load
@@ -371,9 +371,7 @@ def main() -> None:
     # worker spawn + numpy/pandas/package import (~5s across the
     # pool) — session startup cost, not query cost; pay it here so it
     # isn't attributed to whichever kernel query runs first
-    from streaming_cdc_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
+    session.ensure_package_on_executors(spark)
 
     def _warm(batches):
         import numpy  # noqa: F401
@@ -387,12 +385,17 @@ def main() -> None:
         "overwrite"
     ).save()
 
+    # a query streams iff it started a session.drain (the engine's only
+    # stream start) during its run
+    streaming_names: set[str] = set()
+
     def run_pass() -> dict[str, float]:
         timings: dict[str, float] = {}
         for name in HEADLINE:
             fn = QUERIES.get(name)
             if fn is None:
                 continue
+            drains0 = session.DRAIN_COUNT
             t0 = time.time()
             try:
                 df = fn(spark, sf_dir)
@@ -405,6 +408,8 @@ def main() -> None:
             except Exception as e:  # noqa: BLE001
                 timings[name] = -1.0
                 print(f"bench error {name}: {e}", file=sys.stderr)
+            if session.DRAIN_COUNT != drains0:
+                streaming_names.add(name)
         return timings
 
     # Two passes: the first amortizes per-plan one-time costs (Janino
@@ -442,13 +447,7 @@ def main() -> None:
     # state-store cost regardless of data size — on 17 MB they
     # dominate the total, at real scale they amortize. Surface their
     # share so cross-round total comparisons stop requiring tribal
-    # knowledge (VERDICT r8 #7). "stream" catches streaming_*, the
-    # ep2/cdc/zorder streaming twins, stream_static_* and the
-    # progressive long-stream; materialized_user_value is the
-    # foreachBatch upsert sink.
-    streaming_names = {
-        n for n in timings if "stream" in n or n == "materialized_user_value"
-    }
+    # knowledge (VERDICT r8 #7).
     streaming_overhead = round(
         sum(t for n, t in timings.items() if n in streaming_names and t >= 0), 3
     )

@@ -224,7 +224,7 @@ def ep2_streaming_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.25,
         limit=40,
         strategy="cache",
-        # checkpoint lifecycle owned (created + removed) by ep2_streaming
+        # checkpoint lifecycle owned (created + removed) by session.drain
         with_metrics=False,
     )
     assign = out["assignments"]
@@ -310,7 +310,7 @@ def ep2_streaming_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.25,
         limit=40,
         strategy="cache",
-        # checkpoint lifecycle owned (created + removed) by ep2_streaming
+        # checkpoint lifecycle owned (created + removed) by session.drain
         with_metrics=False,
     )
     assign = out["assignments"]
@@ -527,7 +527,7 @@ def ep2_streaming_linker_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streaming_cdc_spark.functions.hashing import md5_long
     from streaming_cdc_spark.session import (
         cached_tmp_dir,
-        drain_to_memory,
+        drain,
         write_mtime_pinned_splits,
     )
     from streaming_cdc_spark.streaming.linker import streaming_linker
@@ -576,4 +576,4 @@ def ep2_streaming_linker_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         limit=_LINKREPLAY_LIMIT,
         strategy="backwards",
     )
-    return drain_to_memory(out, "linkreplay")
+    return drain(out, "linkreplay")

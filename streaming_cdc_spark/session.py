@@ -199,37 +199,69 @@ class stream_start_conf:
         return False
 
 
-def drain_to_memory(out_df, prefix: str, output_mode: str | None = None):
-    """availableNow-drain a streaming DataFrame through a memory sink
-    and return the collected table as a localCheckpointed batch
-    DataFrame. Owns the crash-safety conventions fixed piecemeal in
-    r4-r6: UNTIMED awaitTermination (a timed one can return False on
-    a slow host -> partial table + rmtree of a LIVE checkpoint),
-    checkpoint rmtree and temp-view drop in finally, fresh uuid query
-    name per call (replays must not collide). output_mode: None =
-    sink default (append); 'update' makes the memory sink ACCUMULATE
-    each batch's changed-key emissions — the returned table then
-    holds one row per (key, batch-that-touched-it), which is the
-    update-mode evidence surface."""
-    import shutil
+DRAIN_COUNT = 0  # drain() calls in this process; bench.py reads it
+
+
+def drain(
+    df,
+    prefix: str,
+    *,
+    foreach_batch=None,
+    output_mode: str | None = None,
+    checkpoint: str | None = None,
+):
+    """availableNow-drain a streaming DataFrame: the ONE place the
+    engine starts a stream. Runs until the input is exhausted, then
+    stops.
+
+    With ``foreach_batch=None`` the stream drains through a memory
+    sink and the collected table is returned as a localCheckpointed
+    batch DataFrame (the temp view is dropped before returning). Given
+    a handler it runs ``foreachBatch(handler)`` and returns None; the
+    handler's sink owns its data.
+
+    Owns the crash-safety conventions fixed piecemeal in r4-r6:
+    shuffle partitions pinned by stream_start_conf; a fresh uuid query
+    name per call (replays must not collide); an UNTIMED
+    awaitTermination — a timed one can return False on a slow host,
+    and the drain would then read a PARTIAL table and rmtree a LIVE
+    checkpoint; checkpoint removal in ``finally`` only when this call
+    created it. A caller-supplied ``checkpoint`` is caller-owned and
+    survives, so a second drain on it resumes where the first stopped
+    (restart/replay). output_mode: None = sink default (append);
+    'update' makes the memory sink ACCUMULATE each batch's changed-key
+    emissions — the returned table then holds one row per (key,
+    batch-that-touched-it), the update-mode evidence surface."""
     import uuid
 
-    spark = out_df.sparkSession
+    global DRAIN_COUNT
+    DRAIN_COUNT += 1
+    spark = df.sparkSession
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    ckpt = cached_tmp_dir(f"{prefix}_ckpt_")
+    ckpt = tempfile.mkdtemp(prefix=f"{prefix}_ckpt_") if checkpoint is None else checkpoint
+    q = None
     try:
-        w = out_df.writeStream.format("memory")
+        w = df.writeStream.queryName(name)
+        if foreach_batch is None:
+            w = w.format("memory")
+        else:
+            w = w.foreachBatch(foreach_batch)
         if output_mode is not None:
             w = w.outputMode(output_mode)
         with stream_start_conf(spark):
             q = (
-                w.queryName(name)
-                .option("checkpointLocation", ckpt)
+                w.option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
                 .start()
             )
         q.awaitTermination()
-        return spark.table(name).localCheckpoint()
+        if foreach_batch is None:
+            return spark.table(name).localCheckpoint()
+        return None
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        spark.catalog.dropTempView(name)
+        if q is not None:
+            q.stop()  # no-op once terminated; stops it on interrupt
+        if checkpoint is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+        if foreach_batch is None:
+            spark.catalog.dropTempView(name)

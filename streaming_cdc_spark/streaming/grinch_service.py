@@ -63,19 +63,6 @@ class GrinchStreamService:
             )
         self.n_batches += 1
 
-    def start(self, stream: DataFrame, checkpoint: str):
-        """Attach to a streaming DataFrame; returns the StreamingQuery
-        (availableNow-compatible; call awaitTermination yourself)."""
-        from streaming_cdc_spark.session import stream_start_conf
-
-        with stream_start_conf(stream.sparkSession):
-            return (
-                stream.writeStream.foreachBatch(self.foreach_batch)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-
     def flat_clusters(self, threshold: float) -> dict:
         """C14 flat cut of the accumulated tree."""
         if self.tree is None:

@@ -179,102 +179,3 @@ def streaming_linker(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def streaming_linker_tws(
-    stream: DataFrame,
-    threshold: float,
-    limit: int | None = None,
-    strategy: str = "cache",
-    key_col: str = "category",
-    id_col: str = "mention_index",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The SAME bounded-memory linker on Spark 4's arbitrary-state API
-    (``transformWithStateInPandas`` + ``StatefulProcessor`` with a
-    ValueState) instead of ``applyInPandasWithState`` — identical fold,
-    identical output, so either state backend can host the operator
-    (transformWithState is the forward path: typed state variables,
-    timers, and state schema evolution). Requires the RocksDB state
-    store provider and the protobuf wheel (the JVM<->Python state
-    server protocol) — the e2e test importorskips accordingly."""
-    if strategy not in STRATEGIES:
-        raise ValueError(f"unknown strategy {strategy!r}")
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from streaming_cdc_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(stream.sparkSession)
-
-    state_schema = StructType(
-        [
-            StructField("ids", ArrayType(LongType())),
-            StructField("clusters", ArrayType(LongType())),
-            StructField("last_seen", ArrayType(LongType())),
-            StructField("embs", ArrayType(ArrayType(DoubleType()))),
-            StructField("tick", LongType()),
-        ]
-    )
-
-    class _Linker(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._active = handle.getValueState("active", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._active.exists():
-                ids, clusters, last_seen, embs, tick = self._active.get()
-                st = {
-                    "ids": list(ids),
-                    "clusters": list(clusters),
-                    "last_seen": list(last_seen),
-                    "embs": [np.asarray(e, dtype=np.float64) for e in embs],
-                    "tick": tick,
-                }
-            else:
-                st = {}
-            out = []
-            for pdf in rows:
-                pdf = pdf.sort_values(id_col)
-                out.extend(
-                    fold_mentions(pdf, st, threshold, limit, strategy, id_col, vec_col)
-                )
-            self._active.update(
-                (
-                    st.get("ids", []),
-                    st.get("clusters", []),
-                    st.get("last_seen", []),
-                    [list(map(float, e)) for e in st.get("embs", [])],
-                    st.get("tick", 0),
-                )
-            )
-            yield pd.DataFrame(
-                {
-                    "key": [str(key[0])] * len(out),
-                    "mention_index": [o[0] for o in out],
-                    "cluster_id": [o[1] for o in out],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.select(F.col(key_col).cast("string").alias("key"), id_col, vec_col)
-        .groupBy("key")
-        .transformWithStateInPandas(
-            statefulProcessor=_Linker(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="None",
-        )
-    )

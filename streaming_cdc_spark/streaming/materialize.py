@@ -37,7 +37,6 @@ the stream volume. State on disk is one row per key.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -111,20 +110,6 @@ class _VersionedKeyedTable:
                 shutil.rmtree(d, ignore_errors=True)
             else:
                 break
-
-    def start(self, stream: DataFrame, checkpoint_dir: str | None = None):
-        """Attach to a streaming DataFrame; availableNow drains a
-        finite stream to completion (caller awaits termination)."""
-        from streaming_cdc_spark.session import stream_start_conf
-
-        ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="matagg_ckpt_")
-        with stream_start_conf(stream.sparkSession):
-            return (
-                stream.writeStream.foreachBatch(self.apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
 
     def table(self, spark: SparkSession) -> DataFrame:
         """The current materialized table (empty-version safe)."""

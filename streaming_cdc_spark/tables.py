@@ -30,8 +30,6 @@ TABLES = (
 # Dimensions small enough to broadcast at any scale factor we target.
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.1"
-
 # Parquet TIMESTAMP(NANOS) columns (read as long nanos via
 # spark.sql.legacy.parquet.nanosAsLong) converted to microsecond
 # timestamps — same truncation DuckDB applies when it reads them.
@@ -40,10 +38,6 @@ _NANO_TS_COLUMNS = {
     "orders": ("o_orderdate",),
     "lineitem": ("l_shipdate",),
 }
-
-
-def sf_dir_from_env() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

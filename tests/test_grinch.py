@@ -151,6 +151,7 @@ def test_grinch_stream_service_matches_offline(spark, tmp_path):
     the SAME tree as the offline sequential build."""
     import json as _json
 
+    from streaming_cdc_spark.session import drain
     from streaming_cdc_spark.streaming.grinch_service import GrinchStreamService
 
     rows = clustered_vectors()
@@ -171,8 +172,7 @@ def test_grinch_stream_service_matches_offline(spark, tmp_path):
         .json(str(src))
     )
     svc = GrinchStreamService()
-    q = svc.start(stream, str(tmp_path / "gck"))
-    q.awaitTermination(120)
+    drain(stream, "grinch", foreach_batch=svc.foreach_batch, checkpoint=str(tmp_path / "gck"))
     assert svc.n_batches == 3
 
     from streaming_cdc_spark.operators.grinch import GrinchTree

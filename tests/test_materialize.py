@@ -6,6 +6,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from streaming_cdc_spark import session
 from streaming_cdc_spark.streaming.materialize import MaterializedAggregate
 
 SCHEMA = "user_id long, value double"
@@ -27,8 +28,9 @@ def drain(spark, tmp_path, files):
         .json(str(src))
     )
     mat = MaterializedAggregate(str(tmp_path / "state"), ["user_id"], ["value"])
-    q = mat.start(stream, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    session.drain(
+        stream, "matagg", foreach_batch=mat.apply_batch, checkpoint=str(tmp_path / "ckpt")
+    )
     return mat
 
 
@@ -80,8 +82,9 @@ def test_time_travel_table_at(spark, tmp_path):
     mat = MaterializedAggregate(
         str(tmp_path / "state"), ["user_id"], ["value"], keep_versions=3
     )
-    q = mat.start(stream, str(tmp_path / "ckpt"))
-    q.awaitTermination()
+    session.drain(
+        stream, "matagg", foreach_batch=mat.apply_batch, checkpoint=str(tmp_path / "ckpt")
+    )
     assert mat.versions() == [0, 1, 2]
     # AS OF version 1 == batch aggregate over files 0..1
     got = {
@@ -138,7 +141,7 @@ def test_empty_state_raises(spark, tmp_path):
 
 
 def test_restart_resumes_materialization(spark, tmp_path):
-    """Checkpoint restart: a second start() on the same checkpoint
+    """Checkpoint restart: a second drain on the same checkpoint
     processes only files added since the stop, and the versioned table
     keeps accumulating — final state equals the batch aggregate of
     everything ever streamed."""
@@ -153,8 +156,7 @@ def test_restart_resumes_materialization(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .json(str(src))
         )
-        q = mat.start(stream, ckpt)
-        q.awaitTermination(120)
+        session.drain(stream, "matagg", foreach_batch=mat.apply_batch, checkpoint=ckpt)
 
     for i, rs in enumerate([rows(0), rows(1)]):
         (src / f"f{i}.jsonl").write_text("\n".join(json.dumps(r) for r in rs))

@@ -109,46 +109,6 @@ def test_streaming_two_keys_independent_state(spark, tmp_path):
     assert got[0] == 0 and got[3] == 0 and got[100] == 100 and got[103] == 100
 
 
-def run_stream_tws(spark, tmp_path, files, threshold=0.9, limit=None, strategy="cache"):
-    from streaming_cdc_spark.streaming.linker import streaming_linker_tws
-
-    src = tmp_path / "tws_src"
-    src.mkdir()
-    ckpt = str(tmp_path / "tws_ckpt")
-    for i, rows in enumerate(files):
-        (src / f"f{i}.jsonl").write_text("\n".join(json.dumps(r) for r in rows))
-        time.sleep(0.05)
-    # transformWithState requires the RocksDB state store backend
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).json(str(src))
-    out = streaming_linker_tws(stream, threshold, limit=limit, strategy=strategy)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_out")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from tws_out").collect()
-    return {r["mention_index"]: r["cluster_id"] for r in rows}
-
-
-def test_transform_with_state_linker_matches_offline(spark, tmp_path):
-    """The Spark 4 StatefulProcessor backend reproduces the
-    applyInPandasWithState linker exactly, including multi-batch
-    state carry-over. transformWithState's state protocol speaks
-    protobuf between the JVM and the Python state server — skip
-    where the protobuf wheel isn't installed (this container)."""
-    pytest.importorskip("google.protobuf")
-    rows = mention_rows()
-    got = run_stream_tws(spark, tmp_path, [rows[:2], rows[2:4], rows[4:]])
-    assert got == offline_fold(rows)
-
-
 def test_ep2_multibatch_query_equals_single_batch(spark):
     """The registry-level multi-batch variant (4 id-range files,
     maxFilesPerTrigger=1) must reproduce the single-drain query
@@ -540,7 +500,7 @@ def test_update_mode_emits_only_touched_keys_with_running_totals(spark, tmp_path
     # upgrade changing update-mode emission fails HERE.
     from pyspark.sql import functions as F
 
-    from streaming_cdc_spark.session import drain_to_memory, write_mtime_pinned_splits
+    from streaming_cdc_spark.session import drain, write_mtime_pinned_splits
 
     def df(rows):
         return spark.createDataFrame(rows, "k string, v long")
@@ -558,7 +518,7 @@ def test_update_mode_emits_only_touched_keys_with_running_totals(spark, tmp_path
         F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")
     )
     got = sorted(
-        map(tuple, drain_to_memory(agg, "updt", output_mode="update").collect())
+        map(tuple, drain(agg, "updt", output_mode="update").collect())
     )
     assert got == [
         ("a", 1, 1), ("a", 2, 4), ("a", 3, 9),
@@ -659,7 +619,7 @@ def test_stream_start_conf_sizes_state_stores_and_restores(
     from pyspark.sql import functions as F
 
     from streaming_cdc_spark.session import (
-        drain_to_memory,
+        drain,
         stream_start_conf,
         stream_shuffle_partitions,
         write_mtime_pinned_splits,
@@ -722,7 +682,7 @@ def test_stream_start_conf_sizes_state_stores_and_restores(
     got_default = sorted(
         map(
             tuple,
-            drain_to_memory(agg_stream(), "ssc_eq", output_mode="complete").collect(),
+            drain(agg_stream(), "ssc_eq", output_mode="complete").collect(),
         )
     )
     assert got_small == got_default == [("a", 2, 4), ("b", 1, 2), ("c", 1, 4)]
