@@ -334,12 +334,10 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
-    spark = session.get_spark("bench")
-    # Warm the JVM, codegen, parquet reader, and Python workers once so
-    # per-query times measure the queries, not JIT/session startup.
+def warm(spark, sf_dir: str) -> None:
+    """Session warmups shared by bench.py and tools/time_query.py, so
+    per-query times measure the queries, not JIT/session startup."""
+    # JVM, codegen and parquet reader
     from streaming_cdc_spark.tables import load
 
     load(spark, sf_dir, "region").count()
@@ -384,6 +382,13 @@ def main() -> None:
     spark.range(0, 64, 1, 64).mapInPandas(_warm, "id long").write.format("noop").mode(
         "overwrite"
     ).save()
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
+    spark = session.get_spark("bench")
+    warm(spark, sf_dir)
 
     # a query streams iff it started a session.drain (the engine's only
     # stream start) during its run

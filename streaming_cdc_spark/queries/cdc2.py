@@ -184,36 +184,28 @@ def bisect_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("ep2_streaming_clusters")  # stateful streaming fold; rows-only
-def ep2_streaming_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EP2 streaming form end to end (nn_thresh.py:155-194 semantics):
-    the embeddings table replayed as a parquet FILE STREAM ->
-    bounded-memory incremental linker (applyInPandasWithState, cache
-    strategy, limit=64, keyed by gold label = the partitionable case)
-    -> per-key cluster summary. availableNow drains the stream to
-    completion inside the query; each micro-batch folds its rows in
-    id order, so the result is deterministic. Output: per key
-    (n_mentions, n_clusters, n_singletons). Memory per key is
-    O(limit * dim) regardless of stream length — the bounded-memory
-    claim the reference's paper makes, here as keyed streaming
-    state."""
+def _ep2_stream_summary(spark: SparkSession, sf_dir: str, n_splits: int) -> DataFrame:
+    """The embeddings table replayed as ``n_splits`` id-range
+    micro-batches through ep2_streaming (cache strategy, keyed by gold
+    label), summarized per key as (n_mentions, n_clusters,
+    n_singletons)."""
     from streaming_cdc_spark.pipelines import ep2_streaming
-    from streaming_cdc_spark.tables import load as _load
+    from streaming_cdc_spark.session import id_range_splits, replay
 
-    emb = _load(spark, sf_dir, "embeddings")
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>, label int")
-        # a glob (not the bare file path) so the source's basePath
-        # resolves to the sf directory, as the file source requires
-        .parquet(f"{sf_dir}/embeddings*.parquet")
-        .select(
-            F.col("label").cast("string").alias("category"),
-            F.col("vec_id").alias("mention_index"),
-            F.col("embedding").cast("array<double>").alias("embedding"),
-        )
+    emb = load(spark, sf_dir, "embeddings")
+    stream = replay(
+        spark,
+        ("ep2s", sf_dir, n_splits),
+        "vec_id long, embedding array<float>, label int",
+        lambda: id_range_splits(emb, "vec_id", n_splits),
+    ).select(
+        F.col("label").cast("string").alias("category"),
+        F.col("vec_id").alias("mention_index"),
+        F.col("embedding").cast("array<double>").alias("embedding"),
     )
     gold = emb.select(
-        F.col("vec_id").alias("mention_index"), F.col("label").cast("string").alias("entity_id")
+        F.col("vec_id").alias("mention_index"),
+        F.col("label").cast("string").alias("entity_id"),
     )
     out = ep2_streaming(
         stream,
@@ -227,9 +219,9 @@ def ep2_streaming_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpoint lifecycle owned (created + removed) by session.drain
         with_metrics=False,
     )
-    assign = out["assignments"]
     clus = (
-        assign.join(gold, "mention_index")
+        out["assignments"]
+        .join(gold, "mention_index")
         .groupBy("entity_id", "cluster_id")
         .agg(F.count(F.lit(1)).alias("sz"))
     )
@@ -240,7 +232,20 @@ def ep2_streaming_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MULTIBATCH_SPLITS: dict[str, str] = {}
+@query("ep2_streaming_clusters")  # stateful streaming fold; rows-only
+def ep2_streaming_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EP2 streaming form end to end (nn_thresh.py:155-194 semantics):
+    the embeddings table replayed as a parquet FILE STREAM ->
+    bounded-memory incremental linker (applyInPandasWithState, cache
+    strategy, limit=64, keyed by gold label = the partitionable case)
+    -> per-key cluster summary. availableNow drains the stream to
+    completion inside the query; each micro-batch folds its rows in
+    id order, so the result is deterministic. Output: per key
+    (n_mentions, n_clusters, n_singletons). Memory per key is
+    O(limit * dim) regardless of stream length — the bounded-memory
+    claim the reference's paper makes, here as keyed streaming
+    state."""
+    return _ep2_stream_summary(spark, sf_dir, n_splits=1)
 
 
 @query("ep2_streaming_multibatch")  # stateful streaming fold; rows-only
@@ -261,69 +266,7 @@ def ep2_streaming_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay can follow); the SAME state machine is driver-hash-
     verified end to end by ep2_streaming_linker_replay, whose
     one-hot fixture makes the fold SQL-replayable."""
-    import os
-    import tempfile
-
-    from streaming_cdc_spark.pipelines import ep2_streaming
-    from streaming_cdc_spark.tables import load as _load
-
-    emb = _load(spark, sf_dir, "embeddings")
-    src_dir = _MULTIBATCH_SPLITS.get(sf_dir)
-    if src_dir is None or not os.path.isdir(src_dir):
-        lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-        src_dir = tempfile.mkdtemp(prefix="ep2mb_src_")
-        n_splits = 4
-        step = (hi - lo + n_splits) // n_splits
-        from streaming_cdc_spark.session import write_mtime_pinned_splits
-
-        write_mtime_pinned_splits(
-            [
-                emb.filter(
-                    (F.col("vec_id") >= lo + i * step)
-                    & (F.col("vec_id") < lo + (i + 1) * step)
-                )
-                for i in range(n_splits)
-            ],
-            src_dir,
-        )
-        # fixture prep, not query work: the split layout is immutable
-        # per sf_dir, so repeated calls (bench passes, gate + oracle)
-        # re-run the STREAM each time but not the writes
-        _MULTIBATCH_SPLITS[sf_dir] = src_dir
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>, label int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src_dir}/split_*/*.parquet")
-        .select(
-            F.col("label").cast("string").alias("category"),
-            F.col("vec_id").alias("mention_index"),
-            F.col("embedding").cast("array<double>").alias("embedding"),
-        )
-    )
-    gold = emb.select(
-        F.col("vec_id").alias("mention_index"),
-        F.col("label").cast("string").alias("entity_id"),
-    )
-    out = ep2_streaming(
-        stream,
-        gold,
-        threshold=0.25,
-        limit=40,
-        strategy="cache",
-        # checkpoint lifecycle owned (created + removed) by session.drain
-        with_metrics=False,
-    )
-    assign = out["assignments"]
-    clus = (
-        assign.join(gold, "mention_index")
-        .groupBy("entity_id", "cluster_id")
-        .agg(F.count(F.lit(1)).alias("sz"))
-    )
-    return clus.groupBy(F.col("entity_id").alias("key")).agg(
-        F.sum("sz").cast("long").alias("n_mentions"),
-        F.count(F.lit(1)).alias("n_clusters"),
-        F.sum((F.col("sz") == 1).cast("int")).cast("long").alias("n_singletons"),
-    )
+    return _ep2_stream_summary(spark, sf_dir, n_splits=4)
 
 
 @query(
@@ -487,9 +430,6 @@ _LINKREPLAY_ORACLE = f"""
     FROM isl
 """
 
-_LINKREPLAY_SPLITS: dict[str, str] = {}
-
-
 @query("ep2_streaming_linker_replay", oracle=_LINKREPLAY_ORACLE)
 def ep2_streaming_linker_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE STREAMING LINKER UNDER A FULL ORACLE (VERDICT r8 #4) — the
@@ -522,14 +462,8 @@ def ep2_streaming_linker_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     state per key is O(limit * dim) regardless of stream length —
     the reference paper's bounded-memory claim (README.md:63) as
     keyed streaming state."""
-    import os
-
     from streaming_cdc_spark.functions.hashing import md5_long
-    from streaming_cdc_spark.session import (
-        cached_tmp_dir,
-        drain,
-        write_mtime_pinned_splits,
-    )
+    from streaming_cdc_spark.session import drain, id_range_splits, replay
     from streaming_cdc_spark.streaming.linker import streaming_linker
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id")
@@ -545,30 +479,11 @@ def ep2_streaming_linker_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).select("mention_index", "category", onehot.alias("embedding"))
 
-    src_dir = _LINKREPLAY_SPLITS.get(sf_dir)
-    if src_dir is None or not os.path.isdir(src_dir):
-        lo, hi = m.agg(F.min("mention_index"), F.max("mention_index")).first()
-        src_dir = cached_tmp_dir("linkreplay_src_")
-        n_splits = 4
-        step = (hi - lo + n_splits) // n_splits
-        write_mtime_pinned_splits(
-            [
-                m.filter(
-                    (F.col("mention_index") >= lo + i * step)
-                    & (F.col("mention_index") < lo + (i + 1) * step)
-                )
-                for i in range(n_splits)
-            ],
-            src_dir,
-        )
-        _LINKREPLAY_SPLITS[sf_dir] = src_dir
-
-    stream = (
-        spark.readStream.schema(
-            "mention_index long, category string, embedding array<double>"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src_dir}/split_*/*.parquet")
+    stream = replay(
+        spark,
+        ("linkreplay", sf_dir),
+        "mention_index long, category string, embedding array<double>",
+        lambda: id_range_splits(m, "mention_index", 4),
     )
     out = streaming_linker(
         stream,

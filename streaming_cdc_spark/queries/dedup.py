@@ -1045,9 +1045,6 @@ def progressive_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PROGSTREAM_SPLITS: dict[tuple[str, int], str] = {}
-
-
 def _progstream_oracle(
     n_splits: int, budget: int, df_cap: int = 50, tau: float = 0.2
 ) -> str:
@@ -1096,48 +1093,32 @@ def _run_progressive_stream(
     tau: float = 0.2,
     compact_every: int | None = None,
 ) -> DataFrame:
-    """Shared body: split documents into ``n_splits`` mtime-ordered
-    id-range parquet files, drain them through ProgressiveResolver
-    one micro-batch per file, return the published results (temp
-    state/checkpoint dirs deleted before returning)."""
-    import os
+    """Shared body: replay documents as ``n_splits`` id-range
+    micro-batches through ProgressiveResolver, one bucket per
+    micro-batch, and return the published results (temp state dir
+    deleted before returning). An empty table streams empty splits:
+    no bucket publishes, so results() is the empty RESULT_SCHEMA
+    frame."""
     import shutil
     import tempfile
 
+    from streaming_cdc_spark.session import drain, id_range_splits, replay
     from streaming_cdc_spark.streaming.progressive import ProgressiveResolver
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    src = _PROGSTREAM_SPLITS.get((sf_dir, n_splits))
-    if src is None or not os.path.isdir(src):
-        lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-        if lo is None:  # empty table: nothing to stream
-            return spark.createDataFrame([], ProgressiveResolver.RESULT_SCHEMA)
-        step = (hi - lo + n_splits) // n_splits
-        src = tempfile.mkdtemp(prefix="progstream_src_")
-        from streaming_cdc_spark.session import write_mtime_pinned_splits
-
-        write_mtime_pinned_splits(
-            [
-                docs.filter(
-                    (F.col("doc_id") >= lo + i * step)
-                    & (F.col("doc_id") < lo + (i + 1) * step)
-                ).withColumn("bucket", F.lit(i))
-                for i in range(n_splits)
-            ],
-            src,
-        )
-        _PROGSTREAM_SPLITS[(sf_dir, n_splits)] = src
+    stream = replay(
+        spark,
+        ("progstream", sf_dir, n_splits),
+        "doc_id long, text string, bucket int",
+        lambda: [
+            part.withColumn("bucket", F.lit(i))
+            for i, part in enumerate(id_range_splits(docs, "doc_id", n_splits))
+        ],
+    )
     state_dir = tempfile.mkdtemp(prefix="progstream_state_")
     resolver = ProgressiveResolver(
         state_dir, budget=budget, df_cap=df_cap, tau=tau, compact_every=compact_every
     )
-    stream = (
-        spark.readStream.schema("doc_id long, text string, bucket int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/split_*/*.parquet")
-    )
-    from streaming_cdc_spark.session import drain
-
     try:
         drain(stream, "progstream", foreach_batch=resolver.apply_batch)
         # pin the (tiny) result in block-manager memory so the per-run
@@ -1226,9 +1207,6 @@ def bloom_incremental_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.bloom_prefilter_matches(corpus, batch, key)
 
 
-_BLOOM_SPLITS: dict[str, str] = {}
-
-
 @query(
     "streaming_bloom_status",
     oracle=f"""
@@ -1268,44 +1246,22 @@ def streaming_bloom_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays shards, positions, and that prefix property with
     plain joins. A rare thing: a probabilistic streaming operator
     under a full value-hash oracle, false-positive drops included."""
-    import os
-    import tempfile
-
+    from streaming_cdc_spark.session import drain, id_range_splits, replay
     from streaming_cdc_spark.streaming.windows import streaming_bloom_dedup
 
     docs = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.array_join(F.slice(F.split(F.col("text"), " "), 1, 5), " ").alias("kk"),
     )
-    src_dir = _BLOOM_SPLITS.get(sf_dir)
-    if src_dir is None or not os.path.isdir(src_dir):
-        lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-        src_dir = tempfile.mkdtemp(prefix="bloomst_src_")
-        n_splits = 4
-        step = (hi - lo + n_splits) // n_splits
-        from streaming_cdc_spark.session import write_mtime_pinned_splits
-
-        write_mtime_pinned_splits(
-            [
-                docs.filter(
-                    (F.col("doc_id") >= lo + i * step)
-                    & (F.col("doc_id") < lo + (i + 1) * step)
-                )
-                for i in range(n_splits)
-            ],
-            src_dir,
-        )
-        _BLOOM_SPLITS[sf_dir] = src_dir
-    stream = (
-        spark.readStream.schema("doc_id long, kk string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src_dir}/split_*/*.parquet")
+    stream = replay(
+        spark,
+        ("bloomst", sf_dir),
+        "doc_id long, kk string",
+        lambda: id_range_splits(docs, "doc_id", 4),
     )
     out = streaming_bloom_dedup(
         stream, key_col="kk", id_col="doc_id", n_bits=1 << 14, n_hashes=3, n_shards=8
     )
-    from streaming_cdc_spark.session import drain
-
     return drain(out, "bloomst").select("doc_id", "shard", "status")
 
 

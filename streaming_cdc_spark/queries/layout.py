@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from streaming_cdc_spark.operators import layout as L
 from streaming_cdc_spark.queries.registry import query
 from streaming_cdc_spark.tables import load
-from streaming_cdc_spark.session import cached_tmp_dir, drain
+from streaming_cdc_spark.session import cached_tmp_dir, drain, replay
 
 _ZV = L.zvalue_sql("zx", "zy")
 
@@ -120,9 +120,6 @@ def zorder_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_ZSTREAM_SPLITS: dict[str, str] = {}
-
-
 @query(
     "zorder_streaming_ingest",
     oracle=f"""
@@ -162,33 +159,24 @@ def zorder_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     compactions -> read) equals the one-shot spec. Completes the
     layout family: batch maintenance (zorder_table_roundtrip) and
     streaming ingest share one physical table format."""
-    import os
     import shutil
     import tempfile
+
+    from streaming_cdc_spark.streaming.zorder_sink import ZOrderStreamWriter
 
     events = load(spark, sf_dir, "events").select(
         "event_id",
         F.col("user_id").cast("long").alias("x"),
         F.unix_micros("ts").alias("y"),
     )
-    src = _ZSTREAM_SPLITS.get(sf_dir)
-    if src is None or not os.path.isdir(src):
-        src = cached_tmp_dir("zstream_src_")
-        from streaming_cdc_spark.session import write_mtime_pinned_splits
-
-        write_mtime_pinned_splits(
-            [events.filter(F.col("event_id") % 8 == i) for i in range(8)], src
-        )
-        _ZSTREAM_SPLITS[sf_dir] = src
+    stream = replay(
+        spark,
+        ("zstream", sf_dir),
+        "event_id long, x long, y long",
+        lambda: [events.filter(F.col("event_id") % 8 == i) for i in range(8)],
+    )
     path = tempfile.mkdtemp(prefix="zsink_table_")
-    from streaming_cdc_spark.streaming.zorder_sink import ZOrderStreamWriter
-
     try:
-        stream = (
-            spark.readStream.schema("event_id long, x long, y long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/split_*/*.parquet")
-        )
         w = ZOrderStreamWriter(
             path, "x", "y", bits=16, n_buckets=16, compact_every=3, max_files=1
         )

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from streaming_cdc_spark.operators.temporal import asof_join, time_bucket_rollup
 from streaming_cdc_spark.queries.registry import query
 from streaming_cdc_spark.tables import load
-from streaming_cdc_spark.session import cached_tmp_dir, drain
+from streaming_cdc_spark.session import drain, id_range_splits, replay
 
 # Orders are 1995-2001; shift +27 years so they interleave with the
 # 2024-01 event stream and the as-of target varies per event.
@@ -340,11 +340,13 @@ def materialized_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from streaming_cdc_spark.streaming.materialize import MaterializedAggregate
 
-    stream = (
-        spark.readStream.schema("event_id long, user_id long, value double")
-        .parquet(f"{sf_dir}/events*.parquet")
-        .select("user_id", "value")
-    )
+    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
+    stream = replay(
+        spark,
+        ("matagg", sf_dir),
+        "event_id long, user_id long, value double",
+        lambda: [ev],
+    ).select("user_id", "value")
     state_dir = tempfile.mkdtemp(prefix="matagg_state_")
     mat = MaterializedAggregate(state_dir, ["user_id"], ["value"])
     try:
@@ -445,9 +447,6 @@ def user_series_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WM_SPLITS: dict[str, str] = {}
-
-
 @query(
     "watermarked_daily_counts",
     oracle="""
@@ -496,22 +495,12 @@ def watermarked_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id, so the entire run is deterministic. Boundary hazard is
     measure-zero: watermarks carry microsecond offsets, window ends
     are day-aligned. DECIMAL money sums per the registry rules."""
-    import os
-
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "value")
-    src = _WM_SPLITS.get(sf_dir)
-    if src is None or not os.path.isdir(src):
-        src = cached_tmp_dir("wm_src_")
-        from streaming_cdc_spark.session import write_mtime_pinned_splits
-
-        write_mtime_pinned_splits(
-            [ev.filter(F.col("event_id") % 4 == i) for i in range(4)], src
-        )
-        _WM_SPLITS[sf_dir] = src
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/split_*/*.parquet")
+    stream = replay(
+        spark,
+        ("wm", sf_dir),
+        "event_id long, ts timestamp, value double",
+        lambda: [ev.filter(F.col("event_id") % 4 == i) for i in range(4)],
     )
     agg = (
         stream.withWatermark("ts", "7 days")
@@ -632,7 +621,17 @@ def hourly_ffill_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resample_locf(events, freq_us=14_400_000_000)
 
 
-_SES_SRC: dict[str, str] = {}
+def _sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events stream both session queries drain: the whole table
+    as ONE micro-batch (a one-split replay, cached per sf_dir)."""
+    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    return replay(
+        spark,
+        ("ses", sf_dir),
+        "event_id long, user_id long, ts timestamp",
+        lambda: [ev],
+    )
+
 
 # Shared by streaming_sessions_finalized (native session_window) and
 # streaming_sessions_custom_state (applyInPandasWithState +
@@ -677,18 +676,7 @@ def streaming_sessions_finalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     lateness horizon stay in state. Complements
     watermarked_daily_counts (tumbling) with the MERGING window kind,
     whose state is per-(user, session), not per-bucket."""
-    import os
-
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    src = _SES_SRC.get(sf_dir)
-    if src is None or not os.path.isdir(src):
-        src = cached_tmp_dir("ses_src_")
-        ev.coalesce(1).write.parquet(os.path.join(src, "all"))
-        _SES_SRC[sf_dir] = src
-    stream = (
-        spark.readStream.schema("event_id long, user_id long, ts timestamp")
-        .parquet(f"{src}/all/*.parquet")
-    )
+    stream = _sessions_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "7 days")
         .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
@@ -766,7 +754,6 @@ def exact_moment_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select("event_type", "n", F.round(corr, 6).alias("corr_r"))
 
 
-_DDW_SRC: dict[str, str] = {}
 _DDW_T0, _DDW_G, _DDW_Q, _DDW_D = 1_700_000_000, 1000, 130, 550
 
 
@@ -854,35 +841,21 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped duplicates (else that probe's key would never re-emit).
     All arithmetic integer seconds. A Spark-version change to any of
     those three rules flips the hash."""
-    import os
-
-    from streaming_cdc_spark.session import write_mtime_pinned_splits
-
     ev = load(spark, sf_dir, "events").select("event_id", "user_id")
-    src = _DDW_SRC.get(sf_dir)
-    if src is None or not os.path.isdir(src):
-        lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-        step = (hi - lo + 4) // 4
-        src = cached_tmp_dir("ddw_src_")
-        parts = [
-            ev.filter(
-                (F.col("event_id") >= lo + i * step)
-                & (F.col("event_id") < lo + (i + 1) * step)
-            ).select(
+    stream = replay(
+        spark,
+        ("ddw", sf_dir),
+        "k long, sec long",
+        lambda: [
+            part.select(
                 (F.col("user_id") % 50).alias("k"),
                 (
                     F.lit(_DDW_T0 + i * _DDW_G)
                     + (F.col("user_id") % 50 % 7) * _DDW_Q
                 ).cast("long").alias("sec"),
             )
-            for i in range(4)
-        ]
-        write_mtime_pinned_splits(parts, src)
-        _DDW_SRC[sf_dir] = src
-    stream = (
-        spark.readStream.schema("k long, sec long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/split_*/*.parquet")
+            for i, part in enumerate(id_range_splits(ev, "event_id", 4))
+        ],
     )
     ded = (
         stream.withColumn("ts", F.timestamp_seconds("sec"))
@@ -892,7 +865,6 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drain(ded.select("k", "sec"), "ddw").select("k", "sec")
 
 
-_SSJ_SRC: dict[str, str] = {}
 _SSJ_T0, _SSJ_G, _SSJ_R = 1_700_000_000, 1000, 900
 
 
@@ -980,63 +952,43 @@ def _cb_prologue(
     )"""
 
 
-def _cb_fixture(
+def _cb_streams(
     spark: SparkSession,
     sf_dir: str,
-    cache: dict,
-    prefix: str,
     late_shift: int,
     abandoned_mod4: int | None = None,
     orphan_mod4: int | None = None,
-) -> str:
-    """Write (once per sf_dir) the click/buy mtime-pinned split dirs
-    the stream-join family reads: 5 batches, clicks of era i in batch
-    i (batch 4 empty), buys of era e in batch e+1 (batch 0 empty) —
-    mirrors _cb_prologue exactly; keep the two in lockstep."""
-    import os
-
-    src = cache.get(sf_dir)
-    if src is not None and os.path.isdir(src):
-        return src
-    from streaming_cdc_spark.session import write_mtime_pinned_splits
-
+):
+    """The click/buy stream pair the stream-join family drains, one
+    replay per side: 5 batches, clicks of era i in batch i (batch 4
+    empty), buys of era e in batch e+1 (batch 0 empty) — mirrors
+    _cb_prologue exactly; keep the two in lockstep. Returns (clicks,
+    buys) with (ck, cts, csec) / (bk, bts, bsec) columns and 0-second
+    watermarks on both sides."""
     ev = load(spark, sf_dir, "events").select("event_id", "user_id")
-    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    step = (hi - lo + 4) // 4
-    src = cached_tmp_dir(prefix)
     k = F.col("user_id") % 40
-    empty = ev.filter(F.lit(False)).select(
-        k.alias("k"), F.lit(0).cast("long").alias("sec")
-    )
-    clks, buys = [], []
-    for i in range(5):
-        cf = (
-            (F.col("event_id") % 25 == 0)
-            & (F.col("event_id") >= lo + i * step)
-            & (F.col("event_id") < lo + (i + 1) * step)
-        )
+    empty = ev.limit(0).select(k.alias("k"), F.lit(0).cast("long").alias("sec"))
+
+    def clicks():
+        cf = F.col("event_id") % 25 == 0
         if orphan_mod4 is not None:
             cf = cf & (k % 4 != orphan_mod4)
-        clks.append(
-            ev.filter(cf).select(
+        eras = id_range_splits(ev, "event_id", 4)
+        return [
+            era.filter(cf).select(
                 k.alias("k"),
-                (F.lit(_SSJ_T0 + i * _SSJ_G) + (k % 5) * 40)
-                .cast("long")
-                .alias("sec"),
+                (F.lit(_SSJ_T0 + i * _SSJ_G) + (k % 5) * 40).cast("long").alias("sec"),
             )
-            if i < 4
-            else empty
-        )
-        e = i - 1  # buys arriving at batch i carry time-era i-1
-        bf = (
-            (F.col("event_id") % 25 == 1)
-            & (F.col("event_id") >= lo + e * step)
-            & (F.col("event_id") < lo + (e + 1) * step)
-        )
+            for i, era in enumerate(eras)
+        ] + [empty]
+
+    def buys():
+        bf = F.col("event_id") % 25 == 1
         if abandoned_mod4 is not None:
             bf = bf & (k % 4 != abandoned_mod4)
-        buys.append(
-            ev.filter(bf).select(
+        eras = id_range_splits(ev, "event_id", 4)
+        return [empty] + [
+            era.filter(bf).select(
                 k.alias("k"),
                 (
                     F.lit(_SSJ_T0 + e * _SSJ_G)
@@ -1046,38 +998,25 @@ def _cb_fixture(
                     - F.when(k % 11 == 3, late_shift).otherwise(0)
                 ).cast("long").alias("sec"),
             )
-            if e >= 0
-            else empty
-        )
-    import os as _os
+            for e, era in enumerate(eras)
+        ]
 
-    write_mtime_pinned_splits(clks, _os.path.join(src, "clk"))
-    write_mtime_pinned_splits(buys, _os.path.join(src, "buy"))
-    cache[sf_dir] = src
-    return src
-
-
-def _cb_streams(spark: SparkSession, src: str):
-    """Standard watermarked click/buy stream pair over a _cb_fixture
-    dir: returns (clicks, buys) with (ck, cts, csec) / (bk, bts,
-    bsec) columns and 0-second watermarks on both sides."""
-
-    def _rd(side: str):
+    def side(key: tuple, make_parts, p: str):
         return (
-            spark.readStream.schema("k long, sec long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/{side}/split_*/*.parquet")
+            replay(spark, key, "k long, sec long", make_parts)
             .withColumn("ts", F.timestamp_seconds("sec"))
             .withWatermark("ts", "0 seconds")
+            .select(
+                F.col("k").alias(f"{p}k"),
+                F.col("ts").alias(f"{p}ts"),
+                F.col("sec").alias(f"{p}sec"),
+            )
         )
 
-    c = _rd("clk").select(
-        F.col("k").alias("ck"), F.col("ts").alias("cts"), F.col("sec").alias("csec")
+    return (
+        side(("cbclk", sf_dir, orphan_mod4), clicks, "c"),
+        side(("cbbuy", sf_dir, late_shift, abandoned_mod4), buys, "b"),
     )
-    b = _rd("buy").select(
-        F.col("k").alias("bk"), F.col("ts").alias("bts"), F.col("sec").alias("bsec")
-    )
-    return c, b
 
 
 def _cb_join(c, b, how: str = "inner"):
@@ -1123,8 +1062,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction: an earlier row is evicted only when no on-time
     future partner can satisfy the condition). Row multiplicities
     carry through the join on both engines."""
-    src = _cb_fixture(spark, sf_dir, _SSJ_SRC, "ssj_src_", late_shift=2000)
-    c, b = _cb_streams(spark, src)
+    c, b = _cb_streams(spark, sf_dir, late_shift=2000)
     j = _cb_join(c, b)
     return drain(
         j.select(F.col("ck").alias("k"), "csec", "bsec"), "ssj"
@@ -1181,9 +1119,6 @@ def interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return interval_overlap_pairs(iv, "skey", "iid", "s", "e", bucket_width=14)
 
 
-_LOJ_SRC: dict[str, str] = {}
-
-
 _LOJ_ORACLE = _cb_prologue(late_shift=5000, abandoned_mod4=1) + f"""
     SELECT c.k, c.csec, b.bsec
     FROM cok c JOIN bok b
@@ -1233,18 +1168,13 @@ def streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     blast radius while still exercising late input in the stream.
     NULL bsec is carried as the -1 sentinel on both engines
     (nullable-BIGINT NaN is the scd2 fetch-path hazard)."""
-    src = _cb_fixture(
-        spark, sf_dir, _LOJ_SRC, "loj_src_", late_shift=5000, abandoned_mod4=1
-    )
-    c, b = _cb_streams(spark, src)
+    c, b = _cb_streams(spark, sf_dir, late_shift=5000, abandoned_mod4=1)
     j = _cb_join(c, b, "leftOuter")
     out = drain(j.select(F.col("ck").alias("k"), "csec", "bsec"), "loj")
     return out.select(
         "k", "csec", F.coalesce(F.col("bsec"), F.lit(-1).cast("long")).alias("bsec")
     )
 
-
-_FOJ_SRC: dict[str, str] = {}
 
 _FOJ_ORACLE = _cb_prologue(late_shift=0, abandoned_mod4=1, orphan_mod4=2) + f"""
     SELECT c.k, c.csec, b.bsec
@@ -1300,16 +1230,9 @@ def streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot mask an off-by-one there — the probe test pins
     strictness instead. NULL csec/bsec carried as -1 sentinels on both
     engines (the scd2 nullable-BIGINT fetch hazard)."""
-    src = _cb_fixture(
-        spark,
-        sf_dir,
-        _FOJ_SRC,
-        "foj_src_",
-        late_shift=0,
-        abandoned_mod4=1,
-        orphan_mod4=2,
+    c, b = _cb_streams(
+        spark, sf_dir, late_shift=0, abandoned_mod4=1, orphan_mod4=2
     )
-    c, b = _cb_streams(spark, src)
     j = _cb_join(c, b, "fullOuter")
     out = drain(
         j.select(
@@ -1322,9 +1245,6 @@ def streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("csec"), F.lit(-1).cast("long")).alias("csec"),
         F.coalesce(F.col("bsec"), F.lit(-1).cast("long")).alias("bsec"),
     )
-
-
-_SJW_SRC: dict[str, str] = {}
 
 
 _SJW_ORACLE = _cb_prologue(late_shift=0) + f""",
@@ -1375,8 +1295,7 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic propagates CORRECTLY THROUGH the join into the
     aggregation's finalization decision — the property
     single-operator queries cannot test."""
-    src = _cb_fixture(spark, sf_dir, _SJW_SRC, "sjw_src_", late_shift=0)
-    c, b = _cb_streams(spark, src)
+    c, b = _cb_streams(spark, sf_dir, late_shift=0)
     j = _cb_join(c, b)
     # project AWAY the buy side's event-time column so exactly one
     # event-time column (cts) feeds the downstream stateful
@@ -1503,44 +1422,29 @@ def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SSE_SRC: dict[str, str] = {}
-
-
-def _sse_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per sf_dir) the 3 mtime-pinned id-range event
-    batches the stream-static enrichment pair reads. ONE builder for
-    BOTH queries (stream_static_enrich / stream_static_enrich_
-    evolving): they share the _SSE_SRC cache, so a drift between two
-    copies would poison whichever query ran second — the _cb_fixture
-    lockstep lesson (review r8)."""
-    import os
-
-    from streaming_cdc_spark.session import write_mtime_pinned_splits
-
-    src = _SSE_SRC.get(sf_dir)
-    if src is not None and os.path.isdir(src):
-        return src
+def _sse_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 3 id-range event batches the stream-static enrichment pair
+    and the update/complete-mode queries drain. ONE builder and one
+    replay key for all four readers, so the fixture cannot drift
+    between them — the _cb_streams lockstep lesson (review r8)."""
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    step = (hi - lo + 3) // 3
-    src = cached_tmp_dir("sse_src_")
-    parts = [
-        ev.filter(
-            (F.col("event_id") >= lo + i * step)
-            & (F.col("event_id") < lo + (i + 1) * step)
-        ).select(
-            "event_id",
-            "user_id",
-            "event_type",
-            (F.col("value").cast("decimal(18,2)") * 100)
-            .cast("long")
-            .alias("cents"),
-        )
-        for i in range(3)
-    ]
-    write_mtime_pinned_splits(parts, src)
-    _SSE_SRC[sf_dir] = src
-    return src
+    return replay(
+        spark,
+        ("sse", sf_dir),
+        "event_id long, user_id long, event_type string, cents long",
+        lambda: [
+            part.select(
+                "event_id",
+                "user_id",
+                "event_type",
+                (F.col("value").cast("decimal(18,2)") * 100)
+                .cast("long")
+                .alias("cents"),
+            )
+            for part in id_range_splits(ev, "event_id", 3)
+        ],
+    )
+
 
 _SSE_ORACLE = """
     SELECT c.c_mktsegment, e.event_type,
@@ -1574,18 +1478,11 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer row at every sf — pinned by
     test_sse_fixture_every_event_user_has_customer), so no rows ride
     on matched-ness."""
-    src = _sse_fixture(spark, sf_dir)
+    stream = _sse_stream(spark, sf_dir)
     dim = F.broadcast(
         load(spark, sf_dir, "customer").select(
             F.col("c_custkey").alias("user_id"), "c_mktsegment"
         )
-    )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, cents long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/split_*/*.parquet")
     )
     joined = stream.join(dim, "user_id", "inner")
     drained = drain(joined.select("c_mktsegment", "event_type", "cents"), "sse")
@@ -1609,23 +1506,11 @@ def streaming_sessions_custom_state(spark: SparkSession, sf_dir: str) -> DataFra
     native session_window / tumbling / dropDuplicatesWithinWatermark
     / stream-stream joins all have one; event-time timeouts now do
     too."""
-    import os
-
     from streaming_cdc_spark.session import ensure_package_on_executors
     from streaming_cdc_spark.streaming.windows import streaming_sessionizer_custom
 
     ensure_package_on_executors(spark)
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    src = _SES_SRC.get(sf_dir)
-    if src is None or not os.path.isdir(src):
-        src = cached_tmp_dir("ses_src_")
-        ev.coalesce(1).write.parquet(os.path.join(src, "all"))
-        _SES_SRC[sf_dir] = src
-    stream = (
-        spark.readStream.schema("event_id long, user_id long, ts timestamp")
-        .parquet(f"{src}/all/*.parquet")
-    )
-    out = streaming_sessionizer_custom(stream)
+    out = streaming_sessionizer_custom(_sessions_stream(spark, sf_dir))
     return drain(
         out.select("user_id", "session_start_us", "n_events", "session_us"),
         "sescs",
@@ -1685,7 +1570,7 @@ def stream_static_enrich_evolving(spark: SparkSession, sf_dir: str) -> DataFrame
     import shutil
     import tempfile
 
-    src = _sse_fixture(spark, sf_dir)
+    stream = _sse_stream(spark, sf_dir)
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
@@ -1725,13 +1610,6 @@ def stream_static_enrich_evolving(spark: SparkSession, sf_dir: str) -> DataFrame
             if batch_id == 0:
                 late_rows.write.mode("overwrite").parquet(f"{dim_dir}/late")
 
-        stream = (
-            spark.readStream.schema(
-                "event_id long, user_id long, event_type string, cents long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/split_*/*.parquet")
-        )
         drain(stream, "ssee", foreach_batch=handle)
         return (
             spark.read.parquet(f"{out_dir}/b*")
@@ -1790,17 +1668,10 @@ def streaming_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried (running totals), i.e. the update-mode state machine.
     Rows are unique by construction (a type's count strictly
     increases across its emitting batches). Three mtime-pinned
-    id-range batches (the shared _sse_fixture); state is the
+    id-range batches (the shared _sse_stream); state is the
     per-type running aggregate — at 100 TB the state store holds
     |keys| rows, the mode never rescans history."""
-    src = _sse_fixture(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, cents long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/split_*/*.parquet")
-    )
+    stream = _sse_stream(spark, sf_dir)
     agg = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("cents").cast("long").alias("cents_sum"),
@@ -1844,14 +1715,7 @@ def streaming_complete_mode_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB: re-emission cost scales with the RESULT, not the
     stream, and a result-bounded query is the only kind complete
     mode should ever serve."""
-    src = _sse_fixture(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, cents long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/split_*/*.parquet")
-    )
+    stream = _sse_stream(spark, sf_dir)
     top = (
         stream.groupBy("event_type")
         .agg(

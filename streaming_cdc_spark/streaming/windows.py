@@ -9,141 +9,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def windowed_event_counts(
-    stream: DataFrame,
-    window_duration: str = "10 minutes",
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
-    """Tumbling event-time windows with a late-data watermark:
-    (window_start, window_end, key, n_events, sum_value). Append-mode
-    compatible — windows finalize once the watermark passes."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration), F.col(key_col))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            key_col,
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def streaming_dedup(
-    stream: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup within the watermark horizon:
-    dropDuplicates keyed state with TTL — the streaming form of
-    operators.dedup.exact_dedup_groups."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)
-
-
-def streaming_sessions(
-    stream: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Streaming gap-based sessionization via ``F.session_window`` —
-    the streaming twin of operators.temporal.sessionize: a session
-    closes when no event arrives for ``gap``, and its row finalizes
-    once the watermark passes the session end (append-mode safe).
-    State is per (key, open session), bounded by the watermark.
-
-    Output: (session_start, session_end, key, n_events, sum_value)."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap), F.col(key_col))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            key_col,
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def correlate_streams(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    lookback: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Stream-stream interval join: pair each left event with the
-    right-stream events of the same key in the preceding ``lookback``
-    window. Both sides carry watermarks and the join condition bounds
-    event time on both, so Spark can expire join state — unbounded
-    state is the failure mode of naive stream-stream joins.
-
-    Output: (key, left ts/type/value as l_*, right ts/type/value as
-    r_*, lag_seconds)."""
-    l = (
-        left.withWatermark(ts_col, watermark)
-        .select(
-            F.col(key_col).alias("l_key"),
-            F.col(ts_col).alias("l_ts"),
-            F.col("event_type").alias("l_type"),
-            F.col("value").alias("l_value"),
-        )
-    )
-    r = (
-        right.withWatermark(ts_col, watermark)
-        .select(
-            F.col(key_col).alias("r_key"),
-            F.col(ts_col).alias("r_ts"),
-            F.col("event_type").alias("r_type"),
-            F.col("value").alias("r_value"),
-        )
-    )
-    cond = (
-        (F.col("l_key") == F.col("r_key"))
-        & (F.col("r_ts") <= F.col("l_ts"))
-        & (F.col("r_ts") >= F.col("l_ts") - F.expr(f"INTERVAL {lookback}"))
-    )
-    joined = l.join(r, cond, "inner")
-    return joined.select(
-        F.col("l_key").alias(key_col),
-        "l_ts",
-        "l_type",
-        "l_value",
-        "r_ts",
-        "r_type",
-        "r_value",
-        (F.col("l_ts").cast("long") - F.col("r_ts").cast("long")).alias("lag_seconds"),
-    )
-
-
-def enrich_stream(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: str,
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static enrichment join: the dim side is a bounded
-    DataFrame (entity vocab, source metadata), broadcast to every
-    micro-batch — stateless, so it composes freely before or after
-    stateful operators."""
-    return stream.join(F.broadcast(dim), on, how)
-
-
 def multi_stream_join(
     anchor: DataFrame,
     others: list[tuple[str, DataFrame]],

@@ -1,10 +1,13 @@
-"""session.drain is the engine's one availableNow stream start: its
-sink contract, its cleanup on success and failure, checkpoint
-ownership, and the single-entry-point rule bench.py's streaming
-count relies on."""
+"""session.drain is the engine's one availableNow stream start and
+session.replay its one stream source: the sink contract, cleanup on
+success and failure, checkpoint ownership, the replay cache and batch
+order, and the single-entry-point rules bench.py's streaming count
+relies on."""
 
 import ast
+import atexit
 import json
+import shutil
 import tempfile
 from pathlib import Path
 
@@ -46,22 +49,36 @@ def _owned_ckpts(d: Path, prefix: str):
     return [p.name for p in d.iterdir() if p.name.startswith(f"{prefix}_ckpt_")]
 
 
-def test_write_stream_only_in_session():
-    """Every engine stream starts through session.drain: no module
-    under streaming_cdc_spark/ except session.py touches .writeStream
-    (an AST attribute check, so comments and strings don't count)."""
+def _attribute_sites(attr: str, allowed) -> list[str]:
+    """Every ``.<attr>`` attribute access under streaming_cdc_spark/
+    outside the ``allowed`` paths (an AST check, so comments and
+    strings don't count)."""
     pkg = Path(streaming_cdc_spark.__file__).parent
-    offenders = []
+    sites = []
     for path in sorted(pkg.rglob("*.py")):
-        if path == pkg / "session.py":
+        rel = path.relative_to(pkg)
+        if any(rel == Path(a) or Path(a) in rel.parents for a in allowed):
             continue
         tree = ast.parse(path.read_text(), str(path))
-        offenders += [
-            f"{path.relative_to(pkg)}:{node.lineno}"
+        sites += [
+            f"{rel}:{node.lineno}"
             for node in ast.walk(tree)
-            if isinstance(node, ast.Attribute) and node.attr == "writeStream"
+            if isinstance(node, ast.Attribute) and node.attr == attr
         ]
-    assert offenders == []
+    return sites
+
+
+def test_write_stream_only_in_session():
+    """Every engine stream starts through session.drain: no module
+    except session.py touches .writeStream."""
+    assert _attribute_sites("writeStream", ["session.py"]) == []
+
+
+def test_read_stream_only_in_session_and_sources():
+    """Every engine stream source is a session.replay: .readStream
+    appears only there and in sources/ (the reference-format and
+    external readers)."""
+    assert _attribute_sites("readStream", ["session.py", "sources"]) == []
 
 
 def test_drain_memory_sink_returns_table_and_cleans_up(spark, tmp_path, owned_tmp):
@@ -144,3 +161,86 @@ def test_streaming_query_leaves_no_temp_view(spark, name):
     tables = _table_names(spark)
     QUERIES[name](spark, SF).collect()
     assert _table_names(spark) == tables
+
+
+@pytest.fixture
+def replay_cache(monkeypatch):
+    """An empty replay cache for the test, restored afterwards."""
+    monkeypatch.setattr(session, "_REPLAY_DIRS", {})
+    return session._REPLAY_DIRS
+
+
+def _xs(spark, *lists):
+    return [spark.createDataFrame([(x,) for x in xs], "x long") for xs in lists]
+
+
+def test_replay_reuses_its_directory_and_rebuilds_when_gone(spark, replay_cache):
+    calls = []
+
+    def make_parts():
+        calls.append(1)
+        return _xs(spark, [1, 2], [3])
+
+    key = ("rptest", "reuse")
+    first = session.replay(spark, key, "x long", make_parts)
+    src = replay_cache[key]
+    session.replay(spark, key, "x long", make_parts)
+    assert len(calls) == 1 and replay_cache[key] == src
+    out = session.drain(first, "rpreuse")
+    assert sorted(r.x for r in out.collect()) == [1, 2, 3]
+
+    shutil.rmtree(src)
+    again = session.replay(spark, key, "x long", make_parts)
+    assert len(calls) == 2 and replay_cache[key] != src
+    assert sorted(r.x for r in session.drain(again, "rpreuse").collect()) == [1, 2, 3]
+    shutil.rmtree(replay_cache[key])
+
+
+def test_replay_registers_directory_removal_atexit(spark, replay_cache, monkeypatch):
+    registered = []
+    monkeypatch.setattr(atexit, "register", lambda fn, *a, **kw: registered.append((fn, a)))
+    session.replay(spark, ("rptest", "atexit"), "x long", lambda: _xs(spark, [1]))
+    src = replay_cache[("rptest", "atexit")]
+    assert (shutil.rmtree, (src,)) in registered
+    shutil.rmtree(src)
+
+
+def test_replay_splits_arrive_as_batches_in_list_order(spark, replay_cache):
+    seen: dict[int, list[int]] = {}
+
+    def handler(batch_df, batch_id):
+        seen[batch_id] = sorted(r.x for r in batch_df.collect())
+
+    # list order deliberately differs from value order
+    parts = _xs(spark, [30, 31], [10], [20, 21, 22])
+    stream = session.replay(spark, ("rptest", "order"), "x long", lambda: parts)
+    session.drain(stream, "rporder", foreach_batch=handler)
+    assert seen == {0: [30, 31], 1: [10], 2: [20, 21, 22]}
+    shutil.rmtree(replay_cache[("rptest", "order")])
+
+
+def test_id_range_splits_empty_input(spark):
+    empty = spark.createDataFrame([], "x long")
+    parts = session.id_range_splits(empty, "x", 3)
+    assert len(parts) == 3 and [p.count() for p in parts] == [0, 0, 0]
+
+
+def test_id_range_splits_match_the_oracle_bucket_formula(spark):
+    """Frame i holds exactly the rows the oracles bucket as i with
+    (x - lo) // ((hi - lo + n) // n)."""
+    import duckdb
+
+    xs = [3, 4, 7, 8, 9, 12, 15, 16, 20, 21]
+    df = spark.createDataFrame([(x,) for x in xs], "x long")
+    got = [sorted(r.x for r in p.collect()) for p in session.id_range_splits(df, "x", 4)]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t AS SELECT UNNEST(?) AS x", [xs])
+    rows = con.execute(
+        """
+        WITH b AS (SELECT MIN(x) AS lo, MAX(x) AS hi FROM t)
+        SELECT (x - lo) // ((hi - lo + 4) // 4) AS k, x FROM t, b ORDER BY x
+        """
+    ).fetchall()
+    want = [[x for k, x in rows if k == i] for i in range(4)]
+    assert got == want
+    assert sum(map(len, got)) == len(xs) and all(got)

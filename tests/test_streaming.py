@@ -324,6 +324,20 @@ def test_progressive_compaction_edge_cases(spark, tmp_path):
     assert {tuple(x) for x in r.results(spark).collect()} == before
 
 
+def test_progressive_stream_empty_documents_table(spark, tmp_path):
+    """An empty documents table replays as empty splits: the drain
+    runs, no bucket publishes, and the query returns an empty frame
+    with the result columns."""
+    from streaming_cdc_spark.queries.dedup import _run_progressive_stream
+
+    spark.createDataFrame([], "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    out = _run_progressive_stream(spark, str(tmp_path), n_splits=4, budget=50)
+    assert out.columns == ["batch_id", "cbs", "n_pairs", "n_matches"]
+    assert out.count() == 0
+
+
 def test_progressive_scheduled_compaction(spark, tmp_path):
     """compact_every folds state INSIDE the stream: after 6 buckets
     with compact_every=3/keep_last=2, a compacted generation exists,

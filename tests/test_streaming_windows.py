@@ -1,119 +1,8 @@
-"""Event-time windowed aggregation + streaming dedup, end to end."""
+"""Streaming helpers with no oracle-gated query: the chained
+multi-stream join, in-stream MinHash dedup and windowed token
+counts."""
 
 import json
-
-
-def _run(spark, tmp_path, rows, build):
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "a.jsonl").write_text("\n".join(json.dumps(r) for r in rows))
-    stream = spark.readStream.schema(
-        "ts timestamp, event_type string, value double, user_id long"
-    ).json(str(src))
-    out = build(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("win_out")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.sql("select * from win_out").collect()
-
-
-def test_windowed_counts(spark, tmp_path):
-    from streaming_cdc_spark.streaming.windows import windowed_event_counts
-
-    rows = [
-        {"ts": "2024-01-01 00:01:00", "event_type": "click", "value": 1.0, "user_id": 1},
-        {"ts": "2024-01-01 00:05:00", "event_type": "click", "value": 2.0, "user_id": 2},
-        {"ts": "2024-01-01 00:12:00", "event_type": "click", "value": 4.0, "user_id": 1},
-        # an event far in the future pushes the watermark so earlier
-        # windows finalize and appear in append output
-        {"ts": "2024-01-01 09:00:00", "event_type": "click", "value": 8.0, "user_id": 3},
-    ]
-    got = _run(spark, tmp_path, rows, lambda s: windowed_event_counts(s, "10 minutes", "30 minutes"))
-    by_start = {str(r["window_start"]): r for r in got}
-    w0 = by_start.get("2024-01-01 00:00:00")
-    assert w0 is not None and w0["n_events"] == 2 and w0["sum_value"] == 3.0
-    w1 = by_start.get("2024-01-01 00:10:00")
-    assert w1 is not None and w1["n_events"] == 1
-
-
-def test_streaming_dedup(spark, tmp_path):
-    from streaming_cdc_spark.streaming.windows import streaming_dedup
-
-    rows = [
-        {"ts": "2024-01-01 00:01:00", "event_type": "click", "value": 1.0, "user_id": 7},
-        {"ts": "2024-01-01 00:02:00", "event_type": "click", "value": 1.0, "user_id": 7},
-        {"ts": "2024-01-01 00:03:00", "event_type": "view", "value": 1.0, "user_id": 7},
-    ]
-    got = _run(spark, tmp_path, rows, lambda s: streaming_dedup(s, ["user_id", "event_type"]))
-    kinds = sorted(r["event_type"] for r in got)
-    assert kinds == ["click", "view"]  # duplicate click dropped in-stream
-
-
-def test_streaming_sessions(spark, tmp_path):
-    from streaming_cdc_spark.streaming.windows import streaming_sessions
-
-    rows = [
-        {"ts": "2024-01-01 00:01:00", "event_type": "click", "value": 1.0, "user_id": 1},
-        {"ts": "2024-01-01 00:10:00", "event_type": "click", "value": 2.0, "user_id": 1},
-        # > 30 min gap -> user 1 starts a second session
-        {"ts": "2024-01-01 01:00:00", "event_type": "click", "value": 4.0, "user_id": 1},
-        # far-future event advances the watermark so sessions finalize
-        {"ts": "2024-01-01 09:00:00", "event_type": "click", "value": 8.0, "user_id": 2},
-    ]
-    got = _run(spark, tmp_path, rows, lambda s: streaming_sessions(s))
-    u1 = sorted(
-        ((str(r["session_start"]), r["n_events"]) for r in got if r["user_id"] == 1)
-    )
-    assert u1 == [("2024-01-01 00:01:00", 2), ("2024-01-01 01:00:00", 1)]
-
-
-def test_stream_stream_interval_join(spark, tmp_path):
-    """Clicks join views of the same user within the 10-minute
-    lookback; outside-window and cross-user views don't pair."""
-    import json
-
-    from streaming_cdc_spark.streaming.windows import correlate_streams
-
-    rows = [
-        {"ts": "2024-01-01 00:00:00", "event_type": "view", "value": 1.0, "user_id": 1},
-        {"ts": "2024-01-01 00:05:00", "event_type": "click", "value": 2.0, "user_id": 1},
-        {"ts": "2024-01-01 00:30:00", "event_type": "view", "value": 3.0, "user_id": 1},
-        {"ts": "2024-01-01 00:50:00", "event_type": "click", "value": 4.0, "user_id": 1},
-        {"ts": "2024-01-01 00:04:00", "event_type": "view", "value": 5.0, "user_id": 2},
-    ]
-    src = tmp_path / "src2"
-    src.mkdir()
-    (src / "a.jsonl").write_text("\n".join(json.dumps(r) for r in rows))
-
-    def build(stream):
-        clicks = stream.filter("event_type = 'click'")
-        views = stream.filter("event_type = 'view'")
-        return correlate_streams(clicks, views)
-
-    stream = spark.readStream.schema(
-        "ts timestamp, event_type string, value double, user_id long"
-    ).json(str(src))
-    out = build(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ssj_out")
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from ssj_out").collect()
-    pairs = sorted((str(r["l_ts"]), str(r["r_ts"]), r["lag_seconds"]) for r in got)
-    # click@00:05 pairs with view@00:00 (lag 300); click@00:50 finds no
-    # view within 10 min (view@00:30 is 20 min earlier); user 2 never pairs
-    assert pairs == [("2024-01-01 00:05:00", "2024-01-01 00:00:00", 300)]
 
 
 def test_multi_stream_join_three_tables(spark, tmp_path):
@@ -170,32 +59,6 @@ def test_multi_stream_join_three_tables(spark, tmp_path):
     assert r["user_id"] == 1
     assert r["view_lag_seconds"] == 300
     assert r["buy_lag_seconds"] == 120
-
-
-def test_enrich_stream_static_dim(spark, tmp_path):
-    from streaming_cdc_spark.streaming.windows import enrich_stream
-
-    src = tmp_path / "esrc"
-    src.mkdir()
-    (src / "a.jsonl").write_text(
-        json.dumps({"ts": "2024-01-01 00:01:00", "event_type": "click", "value": 1.0, "user_id": 5})
-    )
-    stream = spark.readStream.schema(
-        "ts timestamp, event_type string, value double, user_id long"
-    ).json(str(src))
-    dim = spark.createDataFrame([(5, "gold"), (6, "basic")], "user_id long, tier string")
-    out = enrich_stream(stream, dim, "user_id")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("enrich_out")
-        .option("checkpointLocation", str(tmp_path / "eck"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from enrich_out").collect()
-    assert len(got) == 1 and got[0]["tier"] == "gold"
 
 
 def test_streaming_minhash_dedup(spark, tmp_path):

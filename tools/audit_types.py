@@ -18,7 +18,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
+from check_oracle import duck_views  # noqa: E402  (sibling tool)
 
 
 SPARK_INT = {"tinyint", "smallint", "int", "bigint"}
@@ -63,11 +63,7 @@ def main() -> int:
     from streaming_cdc_spark.session import get_spark
 
     spark = get_spark("audit-types")
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duck_views(sf_dir)
 
     n_bad = 0
     for name, sql in ORACLES.items():

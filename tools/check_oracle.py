@@ -37,6 +37,17 @@ def table_sig(rows, cols):
     return "\n".join(lines)
 
 
+def duck_views(sf_dir: str):
+    """A DuckDB connection with one view per testdata table in
+    ``sf_dir`` — the names every oracle SQL reads."""
+    from streaming_cdc_spark.tables import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -46,13 +57,7 @@ def main() -> int:
 
     spark = get_spark("check-oracle")
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = duck_views(sf_dir)
 
     n_pass = n_fail = n_nosql = 0
     for name, fn in QUERIES.items():

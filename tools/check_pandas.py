@@ -18,7 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
+from check_oracle import duck_views  # noqa: E402  (sibling tool)
 import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
 
@@ -75,11 +75,7 @@ def main() -> int:
 
     spark = get_spark("check-pandas")
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duck_views(sf_dir)
 
     names = only or list(QUERIES)[:50]
     n_pass = n_fail = n_nosql = 0

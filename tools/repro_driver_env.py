@@ -7,33 +7,13 @@ Usage: python tools/repro_driver_env.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
+from check_oracle import duck_views, table_sig  # noqa: E402  (sibling tool)
 from pyspark.sql import SparkSession  # noqa: E402
-
-
-def canon(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        if v == int(v) and abs(v) < 1e15:
-            return str(int(v))
-        return f"{v:.9g}"
-    if isinstance(v, bool):
-        return str(int(v))
-    return str(v)
-
-
-def table_sig(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("\x01".join(canon(r[i]) for i in order) for r in rows)
 
 
 def main() -> int:
@@ -53,11 +33,7 @@ def main() -> int:
 
     from streaming_cdc_spark.queries import ORACLES, QUERIES
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duck_views(sf_dir)
 
     rc = 0
     for name in only:
@@ -68,8 +44,8 @@ def main() -> int:
         res = con.execute(ORACLES[name])
         dcols = [d[0] for d in res.description]
         drows = res.fetchall()
-        ssig = table_sig(srows, scols)
-        dsig = table_sig(drows, dcols)
+        ssig = table_sig(srows, scols).split("\n")
+        dsig = table_sig(drows, dcols).split("\n")
         if ssig == dsig:
             print(f"PASS {name} rows={len(srows)}")
         else:

@@ -20,6 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402  (the repo-root bench script: shared warmup)
 from streaming_cdc_spark.queries import QUERIES  # noqa: E402
 from streaming_cdc_spark.session import get_spark  # noqa: E402
 
@@ -35,30 +36,7 @@ def main() -> None:
 
     print("loadavg", os.getloadavg())
     spark = get_spark("time_query")
-    from streaming_cdc_spark.session import ensure_package_on_executors
-    from streaming_cdc_spark.tables import load
-
-    # Bench-equivalent warmups: table pages, MLlib, python worker pool.
-    for tbl in ("lineitem", "orders", "customer", "part", "supplier",
-                "documents", "embeddings", "events", "region", "nation"):
-        try:
-            df = load(spark, args.sf_dir, tbl)
-            df.selectExpr(*[f"count({c})" for c in df.columns]).collect()
-        except Exception:
-            pass
-    ensure_package_on_executors(spark)
-
-    def _warm(batches):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-
-        import streaming_cdc_spark.operators.similarity  # noqa: F401
-
-        yield from batches
-
-    spark.range(0, 64, 1, 64).mapInPandas(_warm, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    bench.warm(spark, args.sf_dir)
 
     for name in args.names:
         fn = QUERIES.get(name)
